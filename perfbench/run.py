@@ -8,17 +8,21 @@ own empty warehouse under ``perfbench/.work/``: it generates the inputs
 from ``--seed``, sets up the engine (timed as ``setup_s``), then issues
 ops one at a time (a closed loop with one client) in rounds, each round
 issuing every op kind of the workload once, until at least ``--seconds``
-of op time and at least two rounds have been measured; whole rounds keep
+of op time and at least three rounds have been measured; whole rounds keep
 the mix of ops the same in every run.  Every op's output is checked
 outside the timed region.  The last line of stdout is one JSON object:
 ``{"correct", "attempted", "failed", "metrics"}``; ``--trace 0`` reports
 the end-to-end metrics, ``--trace 1`` the per-layer ones.
 
-A traced run measures two halves of ``--seconds`` in two Spark sessions
-of the same process, one with the Spark event log on and one without,
-in an order set by the seed's parity; the per-layer metrics come from
-the traced half and ``tracing.overhead_pct`` compares the two halves'
-median op latency.  Each run also writes its raw per-op samples to
+A traced run measures three Spark sessions of the same process in turn:
+untraced, traced (the Spark event log on), untraced again; the traced
+one gets half of ``--seconds`` and of the rounds, the others a quarter
+each.  The later sessions reuse a JVM the earlier ones warmed, so
+``tracing.overhead_pct`` compares the traced session's median op
+latency with the mean of the two untraced sessions' medians, one from
+either side of it.  The per-layer metrics come from the traced session,
+whose event log is complete once the session has stopped.  Each run
+also writes its raw per-op samples, and per-op-kind percentiles, to
 ``perfbench/.runs/``.
 """
 
@@ -43,13 +47,12 @@ STAGING_ROOTS = (
 DEFAULT_SF = 0.01
 DRIVER_MEMORY = "4g"
 # Set-up runs this many rounds before measuring: an op's first call
-# costs 2-10x its later calls.  (The next round is still ~20% slower
-# than the one after it while the JVM compiles; a second warm-up round
-# would add ~5 s to every run.)
-WARMUP_ROUNDS = 1
+# costs 2-10x its later calls, and the next two rounds are still 10-35%
+# slower than later ones while the JVM compiles.
+WARMUP_ROUNDS = 3
 # ...and measures at least this many rounds, so that a slow host does not
 # change how many samples each percentile is taken from.
-MIN_ROUNDS = 2
+MIN_ROUNDS = 3
 
 END_TO_END = {
     "latency_p50_s": "s",
@@ -235,6 +238,19 @@ def _mean(values: list[float]) -> float:
     return statistics.fmean(values) if values else 0.0
 
 
+def _per_kind(ops: list[dict]) -> dict:
+    """Op count and latency p50/p90 per op kind (a serve_mix query, or a
+    udf_dag_build ``select``/``full``/``rebuild``): figures that do not
+    depend on how the workload weights its kinds."""
+    walls: dict[str, list[float]] = {}
+    for o in ops:
+        walls.setdefault(o["op"].partition(":")[0], []).append(o["wall_s"])
+    return {
+        k: {"n": len(v), "p50_s": _pct(v, 50), "p90_s": _pct(v, 90)}
+        for k, v in sorted(walls.items())
+    }
+
+
 class Run:
     def __init__(self, args) -> None:
         import workloads
@@ -243,11 +259,7 @@ class Run:
         self.cpus = len(os.sched_getaffinity(0))
         tag = f"{args.workload}-s{args.seed}-t{args.trace}-{os.getpid()}"
         self.work = os.path.join(HERE, ".work", tag)
-        cls = workloads.WORKLOADS[args.workload]
-        if args.tiny and cls is workloads.UdfDagBuild:
-            self.w = cls(args.seed, self.work, args.sf, shape=(4, 2, 2, 2))
-        else:
-            self.w = cls(args.seed, self.work, args.sf)
+        self.w = workloads.WORKLOADS[args.workload](args.seed, self.work, args.sf)
         shutil.rmtree(self.work, ignore_errors=True)
         os.makedirs(os.path.join(self.work, "tmp"))
         os.environ.update(
@@ -269,7 +281,9 @@ class Run:
 
     # -- one Spark session: set-up, then the measured loop ------------------
 
-    def _phase(self, label: str, traced: bool, seconds: float) -> dict:
+    def _phase(
+        self, label: str, traced: bool, seconds: float, warmup_rounds: int, min_rounds: int
+    ) -> dict:
         from dbt_bigquery_udf_spark import get_spark
 
         warehouse = os.path.join(self.work, label, "warehouse")
@@ -297,7 +311,11 @@ class Run:
             self.jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
         self.w.setup(spark)
         rounds = self.w.rounds()
-        warmup = [self.w.run_op(op) for _ in range(WARMUP_ROUNDS) for op in next(rounds)]
+        warmup = []
+        for _ in range(warmup_rounds):
+            for op in next(rounds):
+                self.w.reset(op)
+                warmup.append(self.w.run_op(op))
         setup_s = time.perf_counter() - t0
         t = time.perf_counter()
         warm_ok = all([self._check(r) for r in warmup])
@@ -306,7 +324,7 @@ class Run:
         if self.setup_s is None:
             self.setup_s = _process_age_s() - self.excluded_s
         ops, measured, n_rounds = [], 0.0, 0
-        while measured < seconds or n_rounds < MIN_ROUNDS:
+        while measured < seconds or n_rounds < min_rounds:
             for op in next(rounds):
                 rec = self._measure(op, warehouse if traced else None)
                 ops.append(rec)
@@ -327,6 +345,7 @@ class Run:
     def _measure(self, op: str, warehouse: str | None) -> dict:
         """One timed op, then its check; with ``warehouse`` also the
         files the op wrote there and into the staging directories."""
+        self.w.reset(op)
         if warehouse:
             wh0, st0 = _files((warehouse,)), _files(STAGING_ROOTS)
         start = time.time()
@@ -379,7 +398,7 @@ class Run:
             "setup_s": self.setup_s,
         }
 
-    def _per_layer(self, phase: dict, untraced: dict) -> dict:
+    def _per_layer(self, phase: dict, untraced: list[dict]) -> dict:
         import eventlog
 
         ops = phase["ops"]
@@ -418,7 +437,7 @@ class Run:
         m["staging.bytes_added"] = _mean([o["staging_bytes"] for o in ops])
         m["jvm.peak_rss_mb"] = self.jvm_peak_mb
         m["python.peak_rss_mb"] = _peak_rss_mb("self")
-        base = _median([o["wall_s"] for o in untraced["ops"]])
+        base = _mean([_median([o["wall_s"] for o in p["ops"]]) for p in untraced])
         traced = _median([o["wall_s"] for o in ops])
         m["tracing.overhead_pct"] = 100.0 * (traced - base) / base
         return m
@@ -433,18 +452,27 @@ class Run:
         phases: dict[str, dict] = {}
         try:
             if args.trace:
-                order = ("traced", "untraced") if args.seed % 2 == 0 else ("untraced", "traced")
-                for label in order:
+                # Each session measures its share of --seconds and of
+                # MIN_ROUNDS.  Sessions after the first start in a JVM the
+                # first one warmed: one round does their first calls.
+                for label, share in (("untraced1", 0.25), ("traced", 0.5), ("untraced2", 0.25)):
+                    warmup_rounds = 1 if phases else WARMUP_ROUNDS
                     if phases:
                         self.sessions[-1].stop()
                         self._relocate_inputs(label)
-                    phases[label] = self._phase(label, label == "traced", args.seconds / 2)
+                    phases[label] = self._phase(
+                        label, label == "traced", args.seconds * share,
+                        warmup_rounds, max(1, round(MIN_ROUNDS * share)),
+                    )
                 main = phases["traced"]
             else:
-                main = phases["run"] = self._phase("run", False, args.seconds)
+                main = phases["run"] = self._phase(
+                    "run", False, args.seconds, WARMUP_ROUNDS, MIN_ROUNDS
+                )
             self.jvm_peak_mb = _peak_rss_mb(self.jvm_pid)
             if args.trace:
-                metrics = self._per_layer(main, phases["untraced"])
+                untraced = [phases["untraced1"], phases["untraced2"]]
+                metrics = self._per_layer(main, untraced)
                 units = PER_LAYER
             else:
                 metrics = self._end_to_end(main)
@@ -466,6 +494,7 @@ class Run:
                 "setup_s": self.setup_s,
                 "excluded_s": self.excluded_s,
                 "metrics": metrics,
+                "per_kind": _per_kind(main["ops"]),
                 "phases": [
                     {
                         **{k: p[k] for k in ("label", "traced", "setup_s", "session_s", "warmup", "warmup_ok")},
@@ -514,7 +543,7 @@ def selfcheck() -> int:
             cmd = [
                 sys.executable, os.path.abspath(__file__), "--workload", name,
                 "--seed", "7", "--seconds", "2", "--trace", str(trace),
-                "--sf", "0.001", "--tiny",
+                "--sf", "0.001",
             ]
             proc = subprocess.run(
                 cmd, cwd=ROOT, capture_output=True, text=True, timeout=600
@@ -545,9 +574,8 @@ def main() -> int:
     ap.add_argument("--seconds", type=float, default=8.0)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--sf", type=float, default=DEFAULT_SF,
-                    help="scale factor of the generated tables")
-    ap.add_argument("--tiny", action="store_true",
-                    help="udf_dag_build: a 10-model project instead of 24 (self-check)")
+                    help="scale factor of the generated tables (below 0.01, "
+                    "udf_dag_build also generates a smaller project)")
     ap.add_argument("--selfcheck", action="store_true")
     args = ap.parse_args()
 

@@ -4,8 +4,9 @@
 
 For each workload and trace mode, prints every metric's median, first
 and third quartile (``statistics.quantiles(values, n=4)``) and the
-spread ``(q3 - q1) / median`` over the runs given, plus the runs'
-error rate (failed ops / ops attempted) and the inputs they used.
+spread ``(q3 - q1) / median`` over the runs given, the median over the
+runs of each op kind's p50 and p90, the runs' error rate (failed ops /
+ops attempted) and the inputs they used.
 """
 
 from __future__ import annotations
@@ -38,6 +39,14 @@ def summarize(paths: list[str]) -> dict:
                 "q3": q3,
                 "spread": (q3 - q1) / med if med else None,
             }
+        per_kind = {}
+        for kind in sorted({k for r in recs for k in r["per_kind"]}):
+            runs = [r["per_kind"][kind] for r in recs if kind in r["per_kind"]]
+            per_kind[kind] = {
+                "ops": sum(k["n"] for k in runs),
+                "p50_s": statistics.median(k["p50_s"] for k in runs),
+                "p90_s": statistics.median(k["p90_s"] for k in runs),
+            }
         out[f"{workload}/trace{trace}"] = {
             "runs": len(recs),
             "seeds": sorted(r["seed"] for r in recs),
@@ -49,6 +58,7 @@ def summarize(paths: list[str]) -> dict:
             "ops_attempted": len(ops),
             "error_rate": sum(1 for o in ops if not o["ok"]) / len(ops),
             "metrics": metrics,
+            "per_kind": per_kind,
         }
     return out
 

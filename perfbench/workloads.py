@@ -12,6 +12,9 @@ Every workload has the same life cycle, driven by ``run.py``:
     the op sequence, in rounds that each issue every kind of op once;
     ``run.py`` runs the first rounds as warm-up inside set-up, where
     persisted indexes are built;
+``reset(op)``
+    untimed: restore the state the op starts from, so that every call
+    does the same work;
 ``run_op(op)``
     one timed op, split into the layers the workload calls into;
 ``check(rec)``
@@ -43,7 +46,10 @@ import projectgen
 # whose UDF -> TVF -> datamart path udf_dag_build measures instead.
 # The streaming gates (stream_exact_admission and kin, ~3 s a call plus
 # ~7 s of first call) do not fit either; dedup_exact_forget stands in
-# for the index lifecycle's write side.
+# for the index lifecycle's write side (``ServeMix.reset`` empties its
+# tombstones, so every call appends them again).  Each query is issued
+# once per round: an equal weighting, not one taken from any caller's
+# traffic.
 SERVE_QUERIES = (
     "q1_pricing_summary",  # TPC-H: scan + aggregate
     "q5_nation_volume",  # TPC-H: five-way join
@@ -105,7 +111,7 @@ def rows_digest(columns: list[str], rows) -> str:
 
 
 class ServeMix:
-    """Registry queries as callers issue them: ``fn(spark, sf_dir)``
+    """Registry queries issued one at a time: ``fn(spark, sf_dir)``
     builds the plan (and runs any eager driver loop), ``collect()``
     executes it and brings the rows back."""
 
@@ -145,6 +151,17 @@ class ServeMix:
             rng.shuffle(order)
             yield order
 
+    def reset(self, query: str) -> None:
+        """Drop the erasure's tombstones: the forget is idempotent, so
+        without this only its first call would write to the index."""
+        if query != "dedup_exact_forget":
+            return
+        from dbt_bigquery_udf_spark.operators import dedup
+        from dbt_bigquery_udf_spark.operators.index_store import clear_tables
+
+        db = dedup._exact_index_db(self.sf_dir) + "_fg"
+        clear_tables(self.spark, db, ("tombstones",))
+
     def run_op(self, query: str) -> dict:
         from dbt_bigquery_udf_spark import queries as Q
 
@@ -177,12 +194,16 @@ class UdfDagBuild:
     (no DDL)."""
 
     name = "udf_dag_build"
-    # ops per scheduling round: mostly single-model builds, as in
-    # development, plus one nightly full build and one no-op rebuild
+    # ops per scheduling round.  The 3:1:1 weighting is assumed, not
+    # measured: the reference logs a single ``dbt run --select``.
     ROUND = ("select",) * 3 + ("full", "rebuild")
+    # project shape handed to projectgen.write_project: 24 models, or 10
+    # below sf0.01 (the self-check's scale)
+    SHAPE, SMALL_SHAPE = (12, 4, 4, 4), (4, 2, 2, 2)
 
-    def __init__(self, seed: int, work: str, sf: float, shape=(12, 4, 4, 4)):
-        self.seed, self.sf, self.shape = seed, sf, shape
+    def __init__(self, seed: int, work: str, sf: float):
+        self.seed, self.sf = seed, sf
+        self.shape = self.SMALL_SHAPE if sf < 0.01 else self.SHAPE
         self.sf_dir = os.path.join(work, "data", f"sf{sf}")
         self.project_dir = os.path.join(work, "project")
         self.manifest: dict = {}
@@ -239,6 +260,9 @@ class UdfDagBuild:
             if rebuild < full:
                 order[full], order[rebuild] = "rebuild", "full"
             yield [f"select:{rng.choice(marts)}" if k == "select" else k for k in order]
+
+    def reset(self, op: str) -> None:
+        """Nothing to restore: every build replaces what it builds."""
 
     def run_op(self, op: str) -> dict:
         from dbt_bigquery_udf_spark.project import load_project
